@@ -59,88 +59,76 @@ _ORACLES: dict[str, str] = {}
 #            land while the cap holds; at 131 (r14, net-new 0) the
 #            contract stays satisfiable indefinitely.
 #
-# Round 15 changed set. The round's first substantive change —
-# rebalance_scan's spread target going byte-derived instead of
-# cores-derived (sources/tables.py, guide §2.2; VERDICT r14 "Next
-# round" #1's over-partitioning fix) — moves the closure hash of all
-# 46 queries that reach it through _docs()/similarity/aggregations.
-# The window cannot hold 46 on top of the MANDATORY 39-query r12
-# staleness cohort, so: the nine changed queries that were already in
-# this window's stale head attest here (tier 1), qf9/qg2 join them
-# (their own plans are reshaped this round), and the remaining 35
-# carry ATTEST_EXEMPT justifications below — the documented
-# shared-helper escape hatch, backed by the full-surface oracle sweep
-# (tests/test_oracle.py re-verifies all 131 queries vs DuckDB on this
-# exact tree in the driver's own VERIFY pytest run).
+# Changed set. The cube I/O change (sources/raster.py keeps the data
+# schema per RasterCube and materialises windows through Arrow;
+# sources/geotiff.py lists the tile directory once) reaches one
+# registered closure: qr06 reads through RasterCube.load_slice_xy.
 ATTEST_CHANGED: tuple[str, ...] = (
-    "q20_tpch_q1_agg",
-    "q96_knn_bruteforce",
-    "qa9_media_knn",
-    "qd3_knn_label_consistency",
-    "qf2_token_surprisal",
-    "qf3_length_histogram",
-    "qf5_boilerplate_ngrams",
-    "qf7_repeated_spans",
-    "qf8_token_budget",
-    "qf9_dup_rate_estimate",
-    "qg2_char_langid",
-    # batch 2: the LSH pair-search family — _lut_rescore's vectorized
-    # id lookup (all three) and the CC-consumer dedup_pairs=False edge
-    # path (qb2/qc0); qb0's own plan keeps the DISTINCT (top-k surface)
-    "qb0_cosine_pairs_lsh",
-    "qb2_semantic_dedup",
-    "qc0_balanced_sample",
+    "qr06_cube_window_agg",
 )
 
 # The remaining window slots go oldest-first per tools/
 # rotate_window.py's ground-truth reading of the CORRECTNESS_r*
-# artifacts: FIRST the full thirty-nine-query r12 cohort at the
-# 2-round staleness ceiling (latest green row r12, newest recorded
-# r14 — the tier-2 rule makes this head MANDATORY and
+# artifacts: FIRST the full thirty-four-query r13 cohort at the
+# 2-round staleness ceiling (latest green row r13, newest recorded
+# r15 — the tier-2 rule makes this head MANDATORY and
 # test_rotation_policy_capacity_and_staleness enforces it), then the
-# oldest r13-attested queries (planner order: alphabetical within the
+# oldest r14-attested queries (planner order: alphabetical within the
 # equal-aged cohort) for the remaining slots. Every ATTEST_CHANGED
-# entry this round displaces one r13 pull-forward from the TAIL of
-# this list (the r12 head must stay intact).
+# entry displaces one r14 pull-forward from the TAIL of this list
+# (the r13 head must stay intact).
 ATTEST_STALE: tuple[str, ...] = (
-    "q12_sort_merge_join",
-    "q13_left_outer_null",
-    "q14_left_semi",
-    "q15_left_anti",
-    "q16_theta_join",
-    "q18_copartitioned_zip",
-    "q19_range_join",
-    "q21_count_distinct",
-    "q23_cube",
-    "q24_grouping_sets",
-    "q25_having",
-    "q26_zonal_stats",
-    "q27_argmax_gather",
-    "q28_zonal_percentile",
-    "q29_salted_agg",
-    "q63_qa_bitops",
-    "q65_affine_transform",
-    "q75_stream_static_join",
-    "q76_stream_stream_join",
-    "qb5_quality_rules",
-    "qb6_quantized_knn",
-    "qb7_group_sample",
-    "qb8_mixture_upsample",
-    "qb9_dataset_report",
-    "qe2_pq_knn",
-    "qe4_embedding_outliers",
-    "qf1_embedding_dim_stats",
-    "qr02_polygon_mask",
-    "qr06_cube_window_agg",
-    "qr07_resample_downsample",
-    "qr08_reproject_nearest",
-    # r13 pull-forwards (equal-aged; planner's alphabetical order) —
+    "q2a_approx_count_distinct",
+    "q2b_approx_quantiles",
+    "q30_ranking",
+    "q31_lag_lead_gapfill",
+    "q32_moving_average",
+    "q80_scalar_pandas_udf",
+    "q82_grouped_agg_udf",
+    "q83_chunk_udtf",
+    "q90_text_metrics",
+    "q91_exact_dedup",
+    "q92_minhash_lsh_pairs",
+    "q93_lsh_jaccard",
+    "q94_ngram_jaccard_topk",
+    "q95_simhash",
+    "q99_winnow_fingerprint",
+    "qa0_multimodal_decode",
+    "qa1_tfidf_topterms",
+    "qa3_dup_clusters",
+    "qa4_dedup_keep",
+    "qa5_repetition_filters",
+    "qa6_sequence_packing",
+    "qa7_pii_redaction",
+    "qa8_frame_sample",
+    "qb1_decontaminate",
+    "qd1_incremental_dedup",
+    "qd2_temperature_mixture",
+    "qd5_token_drift",
+    "qd9_dedup_keep_best",
+    "qg0_semantic_decontaminate",
+    "qg1_chunk_documents",
+    "qg3_template_prefixes",
+    "qg4_source_dup_matrix",
+    "qg6_code_detect",
+    "qg7_dup_cluster_histogram",
+    # r14 pull-forwards (equal-aged; planner's alphabetical order) —
     # the tail shrinks one entry per ATTEST_CHANGED addition
-    "q01_scan_count",
-    "q02_project_filter",
-    "q03_in_null_predicates",
-    "q17_asof_join",
-    "q22_rollup",
+    "q10_inner_equi",
+    "q11_broadcast_join",
+    "q33_running_total",
+    "q40_global_topk",
+    "q41_per_group_topk",
+    "q50_union_all",
+    "q51_union_distinct",
+    "q52_intersect",
+    "q53_except",
+    "q60_string_funcs",
+    "q61_date_funcs",
+    "q62_math_funcs",
+    "q64_nodata_case",
+    "q66_array_json",
+    "q67_categorical_legend",
 )
 
 ATTEST_FIRST: tuple[str, ...] = ATTEST_CHANGED + ATTEST_STALE
@@ -150,8 +138,10 @@ ATTEST_FIRST: tuple[str, ...] = ATTEST_CHANGED + ATTEST_STALE
 # that would otherwise force rotating the entire surface. r15: the
 # byte-derived rebalance_scan spread (sources/tables.py) reaches 46
 # query closures through the shared _docs()/corpus-scan helpers; the
-# window holds the 11 it can (ATTEST_CHANGED above) and these carry
-# the exemption. The change is PARTITIONING-ONLY — the repartition
+# r15 window held the 11 it could and the other 35 carried the
+# exemption. 26 of those reached the staleness ceiling and attest in
+# the window above (a query may not be both windowed and exempt); the
+# nine below keep it. The change is PARTITIONING-ONLY — the repartition
 # width of a scan-side spread; no expression, filter, aggregation or
 # ordering changed — and every exempted query's values are re-verified
 # against the DuckDB oracle on this exact tree by the full-surface
@@ -167,41 +157,15 @@ _R15_REBALANCE_EXEMPT_REASON = (
 ATTEST_EXEMPT: dict[str, str] = {
     name: _R15_REBALANCE_EXEMPT_REASON
     for name in (
-        "q90_text_metrics",
-        "q91_exact_dedup",
-        "q92_minhash_lsh_pairs",
-        "q93_lsh_jaccard",
-        "q94_ngram_jaccard_topk",
-        "q95_simhash",
-        "q99_winnow_fingerprint",
-        "qa0_multimodal_decode",
-        "qa1_tfidf_topterms",
-        "qa3_dup_clusters",
-        "qa4_dedup_keep",
-        "qa5_repetition_filters",
-        "qa6_sequence_packing",
-        "qa7_pii_redaction",
-        "qa8_frame_sample",
-        "qb1_decontaminate",
         "qb4_passage_dedup",
-        "qd1_incremental_dedup",
-        "qd2_temperature_mixture",
         "qd4_neardup_decontaminate",
-        "qd5_token_drift",
         "qd6_ngram_novelty",
         "qd8_snapshot_overlap",
-        "qd9_dedup_keep_best",
         "qe1_containment_audit",
         "qe3_source_overlap",
         "qe5_bm25_topk",
         "qf4_hybrid_rrf",
-        "qg0_semantic_decontaminate",
-        "qg1_chunk_documents",
-        "qg3_template_prefixes",
-        "qg4_source_dup_matrix",
         "qg5_source_score_percentiles",
-        "qg6_code_detect",
-        "qg7_dup_cluster_histogram",
     )
 }
 

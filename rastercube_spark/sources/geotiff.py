@@ -10,7 +10,11 @@ tile files → per-tile decode → write fractions) and GeoTIFF export
   file to long-form pixel rows (frac/chunk assignment is plain header
   math); one shuffle lands the rows on the cube's partition layout. At
   100 TB this is the standard pattern: file-granular parallel decode, a
-  single repartition to storage layout, no driver involvement.
+  single repartition to storage layout, no driver involvement. The tile
+  glob is listed as its directory with the file-name pattern as
+  ``pathGlobFilter`` — one driver-side listing — rather than expanded
+  into one root path per file, which Spark lists with a job of one task
+  per file once there are more than 32.
 - **codec**: the container has no GDAL/rasterio, so the default codec
   reads ``.npy`` tiles (a real, deterministic decode via numpy) with the
   tile's grid position parsed from the filename
@@ -72,6 +76,40 @@ def geotiff_tile_codec(path: str, content: bytes) -> tuple[np.ndarray, int, int,
     return arr, x0, y0, t
 
 
+def _tile_files(spark: SparkSession, path_glob: str) -> DataFrame:
+    """binaryFile relation over exactly the files ``path_glob`` matches.
+
+    The directories matching the glob's directory part are loaded with
+    its last component as ``pathGlobFilter`` (the per-name matcher the
+    glob itself uses). Loading the glob instead expands it into one root
+    path per file, and above ``parallelPartitionDiscovery.threshold`` (32)
+    roots Spark lists them with a job of one task per file.
+    ``recursiveFileLookup`` keeps partition discovery away from
+    subdirectories (a ``key=value`` one next to tiles fails the load with
+    CONFLICTING_DIRECTORY_STRUCTURES); files it finds below the matched
+    directories are dropped, since a glob component never crosses ``/``.
+    """
+    directory, pattern = os.path.split(path_glob)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path_glob).getFileSystem(spark._jsc.hadoopConfiguration())
+    # the glob's own expansion, driver-side; only emptiness is read, so
+    # no per-file call crosses py4j
+    if not fs.globStatus(hpath(path_glob)):
+        raise FileNotFoundError(f"no file matches {path_glob!r}")
+    dirs = [
+        st.getPath().toString()
+        for st in fs.globStatus(hpath(directory or "."))
+        if st.isDirectory()
+    ]
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", pattern)
+        .option("recursiveFileLookup", "true")
+        .load(dirs)
+        .where(F.regexp_replace("path", "/[^/]*$", "").isin(dirs))
+    )
+
+
 def _decode_long(
     spark: SparkSession,
     cube: RasterCube,
@@ -104,7 +142,7 @@ def _decode_long(
                     }
                 )
 
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
+    binary = _tile_files(spark, path_glob).select("path", "content")
     schema = (
         "frac_num int, time_chunk int, x int, y int, t int, "
         f"{value_col} {_spark_type(dtype)}"
@@ -153,14 +191,7 @@ def reload_fraction(
         raise ValueError(
             f"no tile rows under {path_glob!r} cover fraction {frac_num}"
         )
-    (
-        rows.repartition("frac_num", "time_chunk")
-        .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("frac_num", "time_chunk")
-        .parquet(cube.data_path)
-    )
+    cube.replace_partitions(rows)
 
 
 def _spark_type(np_dtype: str) -> str:

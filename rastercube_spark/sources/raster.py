@@ -13,7 +13,11 @@ rastercube/jgrid/jgrid3.py:100-205 Header, 429-586 write/slice API):
   (``frac_num IN (...) AND time_chunk IN (...)``) from the header's pure
   python frac math (reference jgrid3.py:459-489), so Catalyst prunes
   partition directories before any IO; x/y/t residual predicates push into
-  parquet row-group stats.
+  parquet row-group stats. The data schema is inferred from the parquet
+  footers once per ``RasterCube`` instance and kept, so later reads build
+  their plan without a schema-inference job (the reference likewise reads
+  dtype and geometry from the header it holds, jgrid3.py:114-120); every
+  writer method clears the kept schema.
 - **append**: idempotent time-append (D2, reference
   scripts/complete_ndvi_worldgrid.py:59-186) via dynamic partition
   overwrite — only the trailing/new ``time_chunk`` partitions are
@@ -37,6 +41,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -158,6 +163,10 @@ class RasterCube:
     def __init__(self, root: str, header: CubeHeader):
         self.root = root
         self.header = header
+        # the data schema as the parquet footers give it, inferred on the
+        # first read (not built from the header: cubes may carry extra
+        # columns such as qa, or store values outside value_col)
+        self._schema: StructType | None = None
 
     @property
     def data_path(self) -> str:
@@ -205,20 +214,14 @@ class RasterCube:
 
         return spark.createDataFrame(pd.DataFrame(flat))
 
-    def write_long(
-        self, spark: SparkSession, df: DataFrame, zorder: bool = False
-    ) -> None:
-        """Write an already-long-form relation (frac_num, time_chunk, x, y,
-        t, value...) as the cube's data — the distributed ingest path: the
-        input arrives partitioned however it likes; one shuffle lands it on
-        the cube layout with one file per partition.
-
-        ``zorder=True`` sorts each partition file on the Morton index of
-        (x, y) instead of row-major (y, x): with production-sized
-        fractions (many row groups per file), 2-D window reads then prune
-        row groups on the z column's min/max stats instead of scanning the
-        full fraction. Read results are identical either way.
-        """
+    def _write(self, df: DataFrame, overwrite: str, zorder: bool = False) -> None:
+        """Land ``df`` on the cube layout: one shuffle on the partition key,
+        one file per (frac_num, time_chunk) partition. ``overwrite`` is the
+        per-write partitionOverwriteMode — ``static`` replaces the whole
+        table, ``dynamic`` only the partitions present in ``df``. It is set
+        per write, never read from the session (``get_spark`` makes the
+        session default dynamic, and another writer may leak its own).
+        Clears the kept schema: the write may change what the footers say."""
         from rastercube_spark.functions.zorder import z_index
 
         # the partition columns MUST prefix the sort: FileFormatWriter
@@ -233,32 +236,44 @@ class RasterCube:
         (
             df.repartition("frac_num", "time_chunk")
             .sortWithinPartitions(F.col("frac_num"), F.col("time_chunk"), *sort_cols)
-            # full-cube writes must replace the WHOLE table: under a
-            # session-global dynamic partitionOverwriteMode (e.g. leaked
-            # from another writer), "overwrite" would keep partitions the
-            # new data doesn't touch — rewriting a cube with fewer
-            # partitions would leave stale ones behind
             .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
+            .option("partitionOverwriteMode", overwrite)
             .partitionBy("frac_num", "time_chunk")
             .parquet(self.data_path)
         )
+        self._schema = None
+
+    def write_long(
+        self, spark: SparkSession, df: DataFrame, zorder: bool = False
+    ) -> None:
+        """Write an already-long-form relation (frac_num, time_chunk, x, y,
+        t, value...) as the cube's data — the distributed ingest path: the
+        input arrives partitioned however it likes; one shuffle lands it on
+        the cube layout with one file per partition.
+
+        ``zorder=True`` sorts each partition file on the Morton index of
+        (x, y) instead of row-major (y, x): with production-sized
+        fractions (many row groups per file), 2-D window reads then prune
+        row groups on the z column's min/max stats instead of scanning the
+        full fraction. Read results are identical either way.
+        """
+        # full-cube writes must replace the WHOLE table: under dynamic
+        # overwrite, rewriting a cube with fewer partitions would leave
+        # stale ones behind
+        self._write(df, "static", zorder)
         self.save_header()
 
     def write_arrays(self, spark: SparkSession, data: np.ndarray) -> None:
         """Full-grid write (S10; reference jgrid3.py:444-457 write_all).
         One output file per (frac_num, time_chunk) partition."""
         assert data.shape[2] == self.header.ndates
-        df = self._long_df(spark, data)
-        (
-            df.repartition("frac_num", "time_chunk")
-            .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("frac_num", "time_chunk")
-            .parquet(self.data_path)
-        )
-        self.save_header()
+        self.write_long(spark, self._long_df(spark, data))
+
+    def replace_partitions(self, df: DataFrame) -> None:
+        """Rewrite exactly the (frac_num, time_chunk) partitions present in
+        ``df`` (dynamic partition overwrite); every other partition of the
+        cube stays untouched."""
+        self._write(df, "dynamic")
 
     def append_dates(
         self,
@@ -291,22 +306,12 @@ class RasterCube:
         first = touched[0]
         if first * h.frac_ndates < t_offset:
             existing = (
-                spark.read.parquet(self.data_path)
+                self.df(spark)
                 .where(F.col("time_chunk") == first)
                 .select(*new_df.columns)
             )
             new_df = existing.unionByName(new_df)
-        (
-            new_df.repartition("frac_num", "time_chunk")
-            .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-            # per-write option, not session conf: a session-global dynamic
-            # mode would silently change every other writer's overwrite
-            # semantics (see write_long)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("frac_num", "time_chunk")
-            .parquet(self.data_path)
-        )
+        self.replace_partitions(new_df)
         h.timestamps_ms = list(h.timestamps_ms) + list(new_timestamps_ms)
         self.save_header()
         return True
@@ -325,9 +330,7 @@ class RasterCube:
 
         h = self.header
         last_chunk = (h.ndates - 1) // h.frac_ndates
-        tail = spark.read.parquet(self.data_path).where(
-            F.col("time_chunk") >= last_chunk
-        )
+        tail = self.df(spark).where(F.col("time_chunk") >= last_chunk)
         overgrown = tail.where(F.col("t") >= h.ndates)
         # partition inventories are catalog-sized (one row per partition)
         # and MUST be collected before the write below mutates the files
@@ -347,14 +350,8 @@ class RasterCube:
             for r in survivors.select("frac_num", "time_chunk").distinct().collect()
         }
         if surv_parts:
-            (
-                survivors.repartition("frac_num", "time_chunk")
-                .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("frac_num", "time_chunk")
-                .parquet(self.data_path)
-            )
+            self.replace_partitions(survivors)
+        self._schema = None  # the removals below change the footer set too
         for frac, chunk in sorted(bad_parts - surv_parts):
             # local-filesystem path assumed (asserted in __init__ via the
             # os.path handling throughout); a silent rmtree failure would
@@ -371,7 +368,14 @@ class RasterCube:
 
     # --- read ----------------------------------------------------------
     def df(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.data_path)
+        """The cube's data. The first call infers the schema from the
+        parquet footers (one Spark job); later calls pass the kept schema,
+        so building a read plan runs no job."""
+        if self._schema is None:
+            df = spark.read.parquet(self.data_path)
+            self._schema = df.schema
+            return df
+        return spark.read.schema(self._schema).parquet(self.data_path)
 
     def load_slice_xy(
         self,
@@ -413,18 +417,23 @@ class RasterCube:
     ) -> np.ndarray:
         """Driver-side dense materialization of a *bounded* window —
         the numpy-oracle path for tests and GeoTIFF export, never for
-        analytics (those stay DataFrames)."""
+        analytics (those stay DataFrames). The window's rows come back as
+        Arrow batches (``toPandas``) and land in the nodata-filled array
+        with one fancy-index assignment."""
         h = self.header
         t1 = 0 if t_from is None else t_from
         t2 = h.ndates if t_to is None else t_to
         ny, nx, nt = xy_to[1] - xy_from[1], xy_to[0] - xy_from[0], t2 - t1
         fill = h.nodataval if h.nodataval is not None else 0
         out = np.full((ny, nx, nt), fill, dtype=np.dtype(h.dtype))
-        rows = (
+        pdf = (
             self.load_slice_xy(spark, xy_from, xy_to, t1, t2)
             .select("x", "y", "t", h.value_col)
-            .collect()
+            .toPandas()
         )
-        for r in rows:
-            out[r["y"] - xy_from[1], r["x"] - xy_from[0], r["t"] - t1] = r[h.value_col]
+        out[
+            pdf["y"].to_numpy() - xy_from[1],
+            pdf["x"].to_numpy() - xy_from[0],
+            pdf["t"].to_numpy() - t1,
+        ] = pdf[h.value_col].to_numpy()
         return out

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
 
 import pytest
 
@@ -26,3 +28,24 @@ def duck(sf_dir):
     con = duck_connection(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` runs the body in a fresh job group;
+    on exit ``jobs`` holds the ids of the Spark jobs the body ran."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run():
+        group = f"test-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return run

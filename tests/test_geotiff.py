@@ -632,3 +632,87 @@ def test_geotiff_roundtrip_property():
         assert geot == GEOT and nodata == 0
 
     roundtrip()
+
+
+def _small_header(width: int, height: int, ndates: int) -> CubeHeader:
+    return CubeHeader(
+        width=width, height=height, frac_width=20, frac_height=20,
+        dtype="int16", nodataval=-3000, frac_ndates=2,
+        timestamps_ms=list(range(ndates)),
+    )
+
+
+def test_ingest_runs_no_listing_job(spark, tmp_path, spark_jobs):
+    """More than 32 tile files (Spark's parallel-listing threshold) and
+    the ingest still runs no listing job: every stage of every job it
+    runs reads input, shuffles or writes output."""
+    full = np.arange(40 * 40 * 3, dtype=np.int16).reshape(40, 40, 3)
+    tile_dir = tmp_path / "tiles"
+    tile_dir.mkdir()
+    for t in range(3):
+        for y0 in range(0, 40, 10):
+            for x0 in range(0, 40, 10):
+                np.save(tile_dir / f"tile_{x0}_{y0}_t{t}.npy",
+                        full[y0:y0 + 10, x0:x0 + 10, t])
+    cube = RasterCube(str(tmp_path / "cube"), _small_header(40, 40, 3))
+    with spark_jobs() as jobs:
+        ingest_tiles(spark, cube, f"{tile_dir}/*.npy")
+    assert jobs
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    for j in jobs:
+        desc = store.job(j).description()
+        assert not (desc.isDefined() and "Listing leaf files" in desc.get()), j
+        for sid in spark.sparkContext.statusTracker().getJobInfo(j).stageIds:
+            sd = store.lastStageAttempt(sid)
+            if sd.status().toString() == "SKIPPED":
+                continue
+            moved = (sd.inputBytes() + sd.shuffleReadBytes()
+                     + sd.shuffleWriteBytes() + sd.outputBytes())
+            assert moved > 0, f"job {j} stage {sid} moves no data"
+    np.testing.assert_array_equal(cube.load_slice_array(spark, (0, 0), (40, 40)), full)
+
+
+@pytest.fixture
+def cluttered_tiles(tmp_path):
+    """Tiles at the top level, plus what a ``*.npy`` glob must not pick
+    up: a non-matching file, and a plain and a ``key=value``
+    subdirectory each holding a matching name (with wrong values)."""
+    full = np.arange(40 * 20 * 2, dtype=np.int16).reshape(20, 40, 2)
+    root = tmp_path / "src"
+    tile_dir = root / "tiles"
+    for sub in ("sub", "frac_num=3"):
+        (tile_dir / sub).mkdir(parents=True)
+        np.save(tile_dir / sub / "tile_0_0_t0.npy", np.full((20, 20), 99, np.int16))
+    for t in range(2):
+        for x0 in (0, 20):
+            np.save(tile_dir / f"tile_{x0}_0_t{t}.npy", full[:, x0:x0 + 20, t])
+    (tile_dir / "README.txt").write_text("not a tile")
+    return full, root
+
+
+def test_tile_glob_reads_the_globs_files(spark, cluttered_tiles, tmp_path):
+    """The directory listing returns exactly what loading the glob
+    returns — top-level tiles only — with no error from the
+    subdirectories, also when a directory component is a wildcard; and
+    ingest/reload over the cluttered directory give the source array."""
+    from rastercube_spark.sources.geotiff import _tile_files, reload_fraction
+
+    full, root = cluttered_tiles
+    tops = {f"tile_{x0}_0_t{t}.npy" for t in range(2) for x0 in (0, 20)}
+    for glob in (f"{root}/tiles/*.npy", f"{root}/til*/*.npy"):
+        old = spark.read.format("binaryFile").load(glob).select("path").collect()
+        new = _tile_files(spark, glob).select("path").collect()
+        assert sorted(r.path for r in new) == sorted(r.path for r in old)
+        assert {r.path.rsplit("/", 1)[1] for r in new} == tops
+        assert len(new) == len(tops)
+
+    cube = RasterCube(str(tmp_path / "cube"), _small_header(40, 20, 2))
+    ingest_tiles(spark, cube, f"{root}/tiles/*.npy")
+    np.testing.assert_array_equal(cube.load_slice_array(spark, (0, 0), (40, 20)), full)
+    reload_fraction(spark, cube, 0, f"{root}/tiles/*.npy")
+    np.testing.assert_array_equal(cube.load_slice_array(spark, (0, 0), (40, 20)), full)
+
+    with pytest.raises(FileNotFoundError):
+        _tile_files(spark, f"{root}/tiles/*.tif")

@@ -136,3 +136,83 @@ def test_repair_truncate(spark, cube, tmp_path):
     np.testing.assert_array_equal(got, data)
     # idempotent: second repair is a no-op
     assert c2.repair_truncate(spark) == 0
+
+
+def test_kept_schema_plans_without_jobs(spark, cube, spark_jobs):
+    """After a cube's first read has inferred the data schema, building a
+    window read's plan runs no Spark job (no per-call schema inference)."""
+    c, _ = cube
+    c2 = RasterCube.open(c.root)
+    c2.df(spark)
+    with spark_jobs() as jobs:
+        c2.load_slice_xy(spark, (5, 7), (33, 29), 1, 5)
+    assert jobs == []
+
+
+@pytest.mark.parametrize(
+    "value_col,extra_qa", [("ndvi", True), ("v", False)], ids=["qa", "v"]
+)
+def test_kept_schema_equals_footers(spark, cube, tmp_path, value_col, extra_qa):
+    """The kept schema is the footers' schema, not one rebuilt from the
+    header: an extra qa column and a value column named v survive, and
+    append_dates (a writer) re-reads it."""
+    from pyspark.sql import functions as F
+
+    c0, data = cube
+    header = CubeHeader.from_json(c0.header.to_json())
+    header.value_col = value_col
+    c = RasterCube(str(tmp_path / "cube"), header)
+    long = c._long_df(spark, data)
+    if extra_qa:
+        long = long.withColumn("qa", (F.col("x") % 4).cast("tinyint"))
+    c.write_long(spark, long)
+    assert c.df(spark).schema == spark.read.parquet(c.data_path).schema
+    if extra_qa:
+        assert "qa" in c.df(spark).columns
+    extra = np.full((H, W, 2), 7, dtype=np.int16)
+    assert c.append_dates(spark, extra, [10**12, 10**12 + 1]) is True
+    assert c.df(spark).schema == spark.read.parquet(c.data_path).schema
+    got = c.load_slice_array(spark, (0, 0), (W, H))
+    np.testing.assert_array_equal(got[:, :, :ND], data)
+    np.testing.assert_array_equal(got[:, :, ND:], extra)
+
+
+@pytest.fixture(scope="module")
+def sparse_cube(spark, cube, tmp_path_factory):
+    """The module cube's data with fraction 0 missing entirely and every
+    nodata pixel stored as no row, plus the array reads must return."""
+    from pyspark.sql import functions as F
+
+    c, data = cube
+    sparse = RasterCube(
+        str(tmp_path_factory.mktemp("sparse") / "cube"),
+        CubeHeader.from_json(c.header.to_json()),
+    )
+    long = sparse._long_df(spark, data).where(
+        (F.col("frac_num") != 0) & (F.col("value") != NODATA)
+    )
+    sparse.write_long(spark, long)
+    want = data.copy()
+    want[:FRAC_H, :FRAC_W, :] = NODATA
+    return sparse, want
+
+
+@pytest.mark.parametrize(
+    "xy_from,xy_to,t_from,t_to,empty",
+    [
+        ((2, 3), (18, 17), 0, ND, True),    # inside the missing fraction
+        ((10, 10), (30, 25), 0, 2, False),  # straddles the missing fraction
+        ((21, 5), (47, 39), 2, 5, False),   # straddles time chunks 0 and 1
+    ],
+    ids=["empty", "missing_fraction", "chunk_straddle"],
+)
+def test_slice_array_matches_numpy_on_sparse_cube(
+    spark, sparse_cube, xy_from, xy_to, t_from, t_to, empty
+):
+    c, want = sparse_cube
+    rows = c.load_slice_xy(spark, xy_from, xy_to, t_from, t_to).count()
+    assert (rows == 0) == empty
+    got = c.load_slice_array(spark, xy_from, xy_to, t_from, t_to)
+    expect = want[xy_from[1]:xy_to[1], xy_from[0]:xy_to[0], t_from:t_to]
+    assert got.dtype == expect.dtype
+    np.testing.assert_array_equal(got, expect)
